@@ -45,10 +45,12 @@ def scrape_today(
 ) -> DataFrame:
     """Stages 2-3: scrape source → card extraction.
 
-    With ``base_url`` the source fetches ``{base_url}?page=N`` over
-    HTTP, one page per partition (the reference's live pagination,
-    parallelized); without it the recorded fixtures serve hermetic
-    runs."""
+    With ``base_url`` the source fetches ``{base_url}?page=N`` for
+    pages 1..``pages`` over HTTP (the reference's live pagination,
+    parallelized: at most one partition per core, each a contiguous
+    run of pages, so at most one GET per core in flight); without it
+    the recorded fixtures serve hermetic runs.  ``pages=0`` gives an
+    empty frame."""
     from .functions.html_cards import extract_cards
     from .sources.listing_scrape import register_listing_source
 
@@ -177,8 +179,8 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     # Fail at parse time, not mid-pipeline: --base-url with the default
-    # pages=0 yields a zero-partition DataSource scan that pyspark runs
-    # as read(None) -> AttributeError inside an executor task, and
+    # pages=0 scrapes an empty listing, so the run would record an
+    # empty snapshot and report nothing new without fetching a page, and
     # --smtp-host with no recipients raises SMTPRecipientsRefused only
     # AFTER the whole run (scrape + snapshot + reports) has completed,
     # losing the notification.

@@ -1,8 +1,8 @@
 """SparkSession factory.
 
-Local test profile runs ``local[$SPARK_GRAFT_CPUS]`` (default 32); the
-same builder settings are what we would ship to a 1000-executor
-cluster, minus the master URL:
+Local test profile runs ``local[$SPARK_GRAFT_CPUS]`` (default: the
+usable core count); the same builder settings are what we would ship
+to a 1000-executor cluster, minus the master URL:
 
 - AQE on (runtime coalesce, skew-join splitting, broadcast demotion).
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
@@ -22,7 +22,12 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def get_spark(app_name: str = "aiesec_guc_spark") -> SparkSession:

@@ -3,19 +3,23 @@ Spark 4 Python Data Source API.
 
 The reference drives a headless browser ("Load more" pagination, 30 s
 sleeps) on the driver; the Spark-native shape is a custom
-``DataSource`` whose reader partitions the page list so fetching
-parallelizes across executors.
+``DataSource`` whose reader packs the page list into at most one
+partition per core (``session.default_parallelism()``), each a
+contiguous, ascending run of pages fetched in order by one task.  A
+Python data-source task has a fixed cost, so a scrape pays it once per
+core, not once per page.  Since a task fetches its pages one after
+another, at most one GET per core is in flight.
 
 Three fetch modes behind one seam:
 
 - **fixtures** (default): recorded HTML fragments (hermetic builds,
   FIXTURES.md §A2).
 - **HTTP**: pass ``.option("base_url", ...)`` and ``.option("pages",
-  N)`` — each partition GETs ``{base_url}?page={p}`` with stdlib
-  urllib from its executor, so fetching parallelizes across the
-  cluster instead of serializing behind the reference's per-page
-  sleeps.  Partitioning, schema, and registration are identical in
-  both modes.
+  N)`` — each partition GETs ``{base_url}?page={p}`` for each of its
+  pages with stdlib urllib from its executor, so fetching parallelizes
+  across the cluster instead of serializing behind the reference's
+  per-page sleeps.  Partitioning, schema, and registration are
+  identical in every mode.
 - **pluggable renderer**: ``.option("fetcher",
   "my_pkg.scrape:render_fetch")`` names an importable callable
   ``(page_id, base_url, timeout) -> list[str]`` that REPLACES the
@@ -23,7 +27,7 @@ Three fetch modes behind one seam:
   the reference drives headless Chromium (cookie-dialog dismissal
   aiesec.py:40-46, "Load more" click loop aiesec.py:51-63) because
   the listing only exists after JS executes; a playwright/selenium
-  fetcher slots in here and runs PER PARTITION on the executor, so
+  fetcher slots in here and runs once per page on the executor, so
   rendering still parallelizes across the cluster.  The option is an
   import path (module:function), not a closure, because data-source
   options are strings and the name must resolve on every executor.
@@ -41,6 +45,8 @@ from __future__ import annotations
 import urllib.request
 
 from pyspark.sql import SparkSession
+
+from ..session import default_parallelism
 
 try:  # Spark >= 4.0
     from pyspark.sql.datasource import (
@@ -98,8 +104,8 @@ def _fetch(
     reference's browser pagination (aiesec.py:51-63) as one stateless
     HTTP request per page; with neither it serves recorded fixtures
     (hermetic builds).  Partitioning, schema, and registration are
-    unchanged by the mode — executors call `_fetch` per assigned page,
-    so fetching parallelizes across the cluster.
+    unchanged by the mode — each executor task calls `_fetch` once per
+    page of its run, in page order (see `ListingScrapeReader`).
     """
     if fetcher is not None:
         return list(resolve_fetcher(fetcher)(page_id, base_url, timeout))
@@ -153,9 +159,12 @@ class ListingScrapeDataSource(DataSource):  # type: ignore[misc]
 
 
 class ListingScrapeReader(DataSourceReader):  # type: ignore[misc]
-    """One input partition per listing page — the unit the reference
-    fetches serially behind its per-page sleep (aiesec.py:51-63);
-    here pages fetch in parallel across executors."""
+    """Batch reader: the listing's pages — the unit the reference
+    fetches serially behind its per-page sleep (aiesec.py:51-63) —
+    packed into at most ``default_parallelism()`` partitions, each a
+    contiguous, ascending run of pages, with sizes differing by at
+    most one.  A task fetches its run in order, so at most one GET per
+    core is in flight while the runs fetch in parallel."""
 
     def __init__(self, options=None):
         options = options or {}
@@ -166,13 +175,21 @@ class ListingScrapeReader(DataSourceReader):  # type: ignore[misc]
 
     def partitions(self):
         if self.base_url is not None or self.fetcher is not None:
-            return [InputPartition(p) for p in range(1, self.n_pages + 1)]
-        return [InputPartition(p) for p in sorted(_fixture_pages())]
+            pages = list(range(1, self.n_pages + 1))
+        else:
+            pages = sorted(_fixture_pages())
+        if not pages:
+            return []
+        n_parts = min(default_parallelism(), len(pages))
+        cuts = [i * len(pages) // n_parts for i in range(n_parts + 1)]
+        return [InputPartition(pages[a:b]) for a, b in zip(cuts, cuts[1:])]
 
     def read(self, partition):
-        page_id = partition.value
-        for html in _fetch(page_id, self.base_url, self.timeout, self.fetcher):
-            yield (page_id, html)
+        if partition is None:  # Spark runs an empty plan as one read(None)
+            return
+        for page_id in partition.value:
+            for html in _fetch(page_id, self.base_url, self.timeout, self.fetcher):
+                yield (page_id, html)
 
 
 class ListingScrapeStreamReader(SimpleDataSourceStreamReader):  # type: ignore[misc]

@@ -21,7 +21,7 @@ def test_listing_scrape_datasource(spark):
     rows = df.collect()
     assert len(rows) == 7
     assert df.columns == ["page_id", "html"]
-    # partitioned per page
+    # every fixture page is read, whichever partition its run landed in
     assert {r["page_id"] for r in rows} == {1, 2, 3}
 
 

@@ -141,6 +141,7 @@ class _PageHandler(http.server.BaseHTTPRequestHandler):
         from urllib.parse import parse_qs, urlparse
 
         page = int(parse_qs(urlparse(self.path).query).get("page", ["0"])[0])
+        self.server.gets.append(page)
         body = (PAGE_HTML % (page, page)).encode()
         self.send_response(200)
         self.send_header("Content-Type", "text/html")
@@ -154,10 +155,13 @@ class _PageHandler(http.server.BaseHTTPRequestHandler):
 
 @pytest.fixture()
 def http_server():
+    """Loopback listing; ``.url`` to scrape, ``.gets`` the pages requested."""
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _PageHandler)
+    srv.url = f"http://127.0.0.1:{srv.server_port}/listings"
+    srv.gets = []
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
-    yield f"http://127.0.0.1:{srv.server_port}/listings"
+    yield srv
     srv.shutdown()
     srv.server_close()
 
@@ -169,7 +173,7 @@ def test_scrape_source_http_mode(spark, http_server):
         pytest.skip("Python DataSource API unavailable")
     df = (
         spark.read.format("listing_scrape")
-        .option("base_url", http_server)
+        .option("base_url", http_server.url)
         .option("pages", 3)
         .load()
     )
@@ -177,6 +181,48 @@ def test_scrape_source_http_mode(spark, http_server):
     assert [r.page_id for r in rows] == [1, 2, 3]
     for r in rows:
         assert f'href="http://x/{r.page_id}"' in r.html
+
+
+def test_scrape_source_http_mode_packs_more_pages_than_cores(spark, http_server):
+    """With about three pages per core, the scan still plans at most one
+    partition per core, returns exactly what one `_fetch` per page
+    returns, and GETs each page once."""
+    from aiesec_guc_spark.session import default_parallelism
+    from aiesec_guc_spark.sources.listing_scrape import _fetch, register_listing_source
+
+    if not register_listing_source(spark):
+        pytest.skip("Python DataSource API unavailable")
+    cores = default_parallelism()
+    n_pages = 3 * cores + 1
+    df = (
+        spark.read.format("listing_scrape")
+        .option("base_url", http_server.url)
+        .option("pages", n_pages)
+        .load()
+    )
+    assert df.rdd.getNumPartitions() <= cores
+    rows = sorted((r.page_id, r.html) for r in df.collect())
+    assert sorted(http_server.gets) == list(range(1, n_pages + 1))
+
+    expected = [
+        (p, html) for p in range(1, n_pages + 1) for html in _fetch(p, http_server.url)
+    ]
+    assert rows == expected
+
+
+def test_scrape_source_zero_pages_is_an_empty_frame(spark, http_server):
+    from aiesec_guc_spark.sources.listing_scrape import register_listing_source
+
+    if not register_listing_source(spark):
+        pytest.skip("Python DataSource API unavailable")
+    df = (
+        spark.read.format("listing_scrape")
+        .option("base_url", http_server.url)
+        .option("pages", 0)
+        .load()
+    )
+    assert df.collect() == []
+    assert http_server.gets == []
 
 
 def test_scrape_source_fixture_mode_unchanged(spark):
